@@ -92,12 +92,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_crop_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: truncating pct→pixel crop bounds with clamping (ref pdor/pdor_unit.py:199-202)."""
+    from pdf_drawing_ocr_recognition_spark.functions.croppct import crop_bounds
+
     li = _t(spark, sf_dir, "lineitem")
     h = F.floor(F.col("l_extendedprice"))
     top = F.col("l_discount") * 1000.0
     bottom = F.col("l_tax") * 1000.0 + top
-    y1 = F.least(h, F.greatest(F.lit(0), F.floor(h * top / 100.0))).cast("long")
-    y2 = F.least(h, F.greatest(F.lit(0), F.floor(h * bottom / 100.0))).cast("long")
+    y1 = crop_bounds(h, top)
+    y2 = crop_bounds(h, bottom)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -109,42 +111,47 @@ def q_crop_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_brace_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14: brace-balance gate via length/replace (ref pdor/pdor_utils.py:94-96)."""
+    from pdf_drawing_ocr_recognition_spark.functions.strings import (
+        brace_balanced,
+        count_char,
+    )
+
     ev = _t(spark, sf_dir, "events")
     s = F.when(F.col("event_id") % 7 == 0, F.concat(F.col("props"), F.lit("{"))).otherwise(
         F.col("props")
     )
-    n_open = F.length(s) - F.length(F.replace(s, F.lit("{"), F.lit("")))
-    n_close = F.length(s) - F.length(F.replace(s, F.lit("}"), F.lit("")))
     return ev.select(
         "event_id",
-        n_open.alias("n_open"),
-        n_close.alias("n_close"),
-        (n_open == n_close).alias("balanced"),
+        count_char(s, "{").alias("n_open"),
+        count_char(s, "}").alias("n_close"),
+        brace_balanced(s).alias("balanced"),
     )
 
 
 def q_brace_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15: first-'{' .. last-'}' span, NULL when invalid (ref pdor/pdor_utils.py:98-104)."""
+    from pdf_drawing_ocr_recognition_spark.functions.strings import brace_span
+
     ev = _t(spark, sf_dir, "events")
     s = F.when(
         F.col("event_id") % 5 == 0, F.replace(F.col("props"), F.lit("}"), F.lit(""))
     ).otherwise(F.concat(F.lit("x"), F.col("props"), F.lit("y")))
-    start = F.locate("{", s)
-    rev = F.locate("}", F.reverse(s))
-    end = F.length(s) - rev + 1
-    span = F.when((start > 0) & (rev > 0) & (start < end), F.substring(s, start, end - start + 1))
-    return ev.select("event_id", span.alias("span"))
+    return ev.select("event_id", brace_span(s).alias("span"))
 
 
 def q_error_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13: drop 'Error:'-prefixed results (ref pdor/pdor_unit.py:238-241)."""
+    from pdf_drawing_ocr_recognition_spark.functions.strings import (
+        is_error_prefixed,
+    )
+
     ev = _t(spark, sf_dir, "events")
     raw = F.when(
         F.col("event_type") == "error", F.concat(F.lit("Error: "), F.col("props"))
     ).otherwise(F.col("props"))
     return (
         ev.select("event_id", "event_type", raw.alias("raw"))
-        .filter(~F.col("raw").startswith("Error:"))
+        .filter(~is_error_prefixed(F.col("raw")))
         .select("event_id", "raw")
     )
 
@@ -250,12 +257,14 @@ def q_anti_join_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sub_key_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A20 key prefixing: format_string('sub_%d_%s', idx, key) (ref :282)."""
+    from pdf_drawing_ocr_recognition_spark.functions.strings import sub_key
+
     ev = _t(spark, sf_dir, "events")
     return ev.select(
         "event_id",
-        F.format_string(
-            "sub_%d_%s", (F.col("event_id") % 5).cast("int"), F.col("event_type")
-        ).alias("merged_key"),
+        sub_key((F.col("event_id") % 5).cast("int"), F.col("event_type")).alias(
+            "merged_key"
+        ),
     )
 
 
@@ -425,7 +434,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN scale path: hyperplane sign-bit buckets + occupancy
-    (Arrow bucketizer — bitwise twin of functions.vectors.hyperplane_sign_bits)."""
+    (Arrow bucketizer: sequential-fold dots bitwise equal to the Column
+    ``dot``, sign bits packed into a LONG)."""
     from pdf_drawing_ocr_recognition_spark.operators.similarity import bucketize
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3299,8 +3309,7 @@ def q_ivm_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ok = False
     if not ok:
         shutil.rmtree(root, ignore_errors=True)
-        for p in (view, view + "_bak"):
-            shutil.rmtree(p, ignore_errors=True)
+        shutil.rmtree(view, ignore_errors=True)
         append_snapshot(docs.repartitionByRange(8, "doc_id"), root)
         maintain_agg(spark, root, view, ["lang"], aggs)  # bootstrap
         delete_from(spark, root, [("doc_id", "<", thr)])

@@ -2,7 +2,7 @@
 
     spark-submit --py-files dist/pdor_spark.zip jobs/run_extraction.py \
         --pages <pages parquet dir> --patterns <patterns.json> \
-        --out <output dir> [--buckets 64] [--langs en,zh,de] [--relational]
+        --out <output dir> [--buckets 64] [--langs en,zh,de]
 
 Runs the manifest-resumable extraction job: killed runs resume idempotently
 (re-invoke with the same --out).  Per-partition metrics are written to

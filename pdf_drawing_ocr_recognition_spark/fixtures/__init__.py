@@ -4,7 +4,6 @@ from .gen_pages import (
     PATTERNS,
     build_griddoc,
     encode_grid_image,
-    gen_corpus,
     write_corpus,
     write_patterns,
 )
@@ -13,7 +12,6 @@ __all__ = [
     "PATTERNS",
     "build_griddoc",
     "encode_grid_image",
-    "gen_corpus",
     "write_corpus",
     "write_patterns",
 ]

@@ -464,28 +464,6 @@ def gen_rows(n_rows: int, seed: int = SEED, start: int = 0):
         yield url, ts, html, raw_text, lang
 
 
-def gen_corpus(n_rows: int, seed: int = SEED):
-    """Materialize the corpus as a pyarrow Table (input_hint schema, exactly)."""
-    import pyarrow as pa
-
-    urls, tss, htmls, texts, langs = [], [], [], [], []
-    for url, ts, html, text, lang in gen_rows(n_rows, seed):
-        urls.append(url)
-        tss.append(ts)
-        htmls.append(html)
-        texts.append(text)
-        langs.append(lang)
-    return pa.table(
-        {
-            "url": pa.array(urls, pa.string()),
-            "warc_ts": pa.array(tss, pa.timestamp("us")),
-            "html": pa.array(htmls, pa.binary()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(langs, pa.string()),
-        }
-    )
-
-
 def _write_shard(args) -> str:
     path, seed, lo, hi, idx = args
     import os

@@ -63,27 +63,6 @@ def minhash_signature(sh: Column, n_hashes: int = 16) -> Column:
     return F.array(*[salted_min(j) for j in range(n_hashes)])
 
 
-def window_minima(hashes: Column, n_windows: int = 8, width: int = 4) -> Column:
-    """Per-window minima over an ARRAY<STRING> of md5 hex digests.
-
-    The scale path for MinHash: instead of n_hashes salted md5s per shingle,
-    compute ONE md5 per (salt, shingle) and treat each disjoint *width*-hex
-    window of the digest as an (approximately independent) hash function —
-    min-of-window-j across shingles is then a valid minwise value.  8x fewer
-    digest computations for a 16-wide signature built from 2 salts.
-    *hashes* must be a materialized column (post-exchange), or Catalyst will
-    inline its expression into every window's array_min.
-    """
-    def window_min(offset: int):
-        # offset closed over outside the lambda (1-arg lambda — see the
-        # salted_min note above about pyspark's arity-based index injection)
-        return F.array_min(
-            F.transform(hashes, lambda h: F.substring(h, offset, width))
-        )
-
-    return F.array(*[window_min(j * width + 1) for j in range(n_windows)])
-
-
 def minhash_sig_fold(
     sh: Column, salts: tuple[str, ...] = ("0", "1"), n_windows: int = 8, width: int = 4
 ) -> Column:
@@ -91,10 +70,12 @@ def minhash_sig_fold(
 
     One fold over the shingle array per salt: each step computes ONE md5 and
     lowers a (n_windows)-wide running-minimum accumulator via zip_with(least).
-    Equivalent output to ``window_minima`` over per-salt digest arrays, but the
-    expression tree is ~10x smaller (one md5 reference instead of n_windows
-    array_min/transform pairs), which matters for codegen time and per-row
-    work.  Returns ARRAY<STRING> of len(salts)*n_windows.
+    Each disjoint *width*-hex window of the digest acts as an (approximately
+    independent) hash function, so min-of-window-j across shingles is a valid
+    minwise value.  Folding keeps the expression tree small (one md5
+    reference instead of n_windows array_min/transform pairs), which matters
+    for codegen time and per-row work.  Returns ARRAY<STRING> of
+    len(salts)*n_windows.
     """
     top = F.lit("￿")  # sorts above every hex digest substring
 

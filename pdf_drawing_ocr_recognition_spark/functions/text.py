@@ -103,7 +103,7 @@ def kgram_hashes(col: Column, k: int = 8) -> Column:
     """md5 of every character k-gram of the whitespace-normalized lowercase
     text — stage 1 of winnowing.  Materialize this column (post-exchange)
     before applying ``winnow_minima``, or Catalyst inlines the whole hash
-    array into every window's min (the ``window_minima`` caveat)."""
+    array into every window's min."""
     s = F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
     n_grams = F.length(s) - F.lit(k - 1)
     # Guard: sequence(1, 0) evaluates DESCENDING to [1, 0] in Spark, which

@@ -57,20 +57,6 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b, dim) / denom)
 
 
-def hyperplane_sign_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: sign bits of dot(vec, plane_i) packed into an int.
-
-    *planes* are deterministic literals (seeded offline) embedded in the plan,
-    so the same constants can be pasted into the oracle SQL.
-    """
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(vec, p, dim=len(plane)) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
-
-
 # ---------------------------------------------------------------------------
 # NumPy twins of the sequential folds — used by the Arrow-batched scorers in
 # operators/similarity.py.  np.cumsum accumulates strictly left-to-right
@@ -105,14 +91,3 @@ def seq_norm_np(a):
     import numpy as np
 
     return np.sqrt(seq_dot_np(a, a))
-
-
-def half_up_round_np(x, digits: int):
-    """Round-half-away-from-zero, the same direction as Spark's F.round and
-    DuckDB's round().  Used only for *candidate selection* inside Arrow
-    scorers (with slack); authoritative output rounding always happens in
-    Spark so engine semantics stay identical to the pre-Arrow plans."""
-    import numpy as np
-
-    scale = 10.0**digits
-    return np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale

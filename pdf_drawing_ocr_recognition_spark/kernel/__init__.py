@@ -20,8 +20,8 @@ from .render import (
     flatten_dict,
 )
 from .html_extract import extract_main_text, block_features
-from .grid import decode_grid_payload, detect_rule_lines, assemble_cells
-from .page import decode_page, extract_document, PLAINTEXT_HEADER
+from .grid import detect_rule_lines, assemble_cells
+from .page import decode_page, extract_document
 
 __all__ = [
     "has_balanced_braces",
@@ -39,10 +39,8 @@ __all__ = [
     "flatten_dict",
     "extract_main_text",
     "block_features",
-    "decode_grid_payload",
     "detect_rule_lines",
     "assemble_cells",
     "decode_page",
     "extract_document",
-    "PLAINTEXT_HEADER",
 ]

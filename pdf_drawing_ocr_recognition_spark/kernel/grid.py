@@ -284,10 +284,3 @@ def decode_grid_image(gray: np.ndarray, jittered: bool = False) -> str:
         )
         for band in rows
     )
-
-
-def decode_grid_payload(png_bytes: bytes) -> str:
-    """PNG page payload → raw assembled string (decode + grid decode)."""
-    from .png import decode_png
-
-    return decode_grid_image(decode_png(png_bytes))

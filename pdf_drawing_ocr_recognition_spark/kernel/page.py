@@ -39,13 +39,11 @@ from .html_extract import extract_main_text
 from .merge import merge_fold
 from .parse import is_error_result, parse_literal_result
 from .png import decode_png
-from .render import PLAINTEXT_TITLE, format_value, render_plaintext
+from .render import format_value, render_plaintext
 
 GRID_MAGIC = b"GRIDDOC1"
 DEFAULT_MAX_TRY = 5  # ref configs.ini:21-23 preset, bounds 1-10 pdor/pdor_utils.py:170-171
 FULL_PAGE_BOX = [0.0, 100.0, 0.0, 100.0]  # ref pdor/pdor_pattern.py:73 default
-
-PLAINTEXT_HEADER = PLAINTEXT_TITLE + "\n" + "=" * 50 + "\n\n"
 
 # Exception-taxonomy parity (ref pdor/pdor_exception.py:10-171).  All ten
 # reference classes, mapped to where each lives in this engine:
@@ -104,15 +102,6 @@ def parse_grid_container(payload: bytes) -> tuple[str, list[bytes]]:
 
 def is_grid_payload(payload: bytes) -> bool:
     return payload is not None and payload[: len(GRID_MAGIC)] == GRID_MAGIC
-
-
-def decode_sub_image(gray, box) -> str:
-    """Deterministic decode leaf for one pattern sub-box of one page raster.
-
-    Crop per the reference's pct arithmetic, then grid-decode the crop into the
-    raw assembled string (the stand-in for the LLM reply — SURVEY.md D2).
-    """
-    return decode_grid_image(crop(gray, tuple(box)))
 
 
 def maybe_deskew(gray):

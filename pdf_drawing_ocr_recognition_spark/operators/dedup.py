@@ -141,8 +141,8 @@ def minhash_signatures_exploded(
     min means the shuffle carries one row per (doc, partition) — at 10^12
     docs this is the same bytes as the fold path but far less CPU.
 
-    Output is value-identical to ``window_minima`` over per-salt digest
-    arrays; docs whose text yields no shingles (<3 words) are absent from
+    Output is value-identical to ``functions.dedup.minhash_sig_fold`` (the
+    per-window minima of per-salt md5 digests); docs whose text yields no shingles (<3 words) are absent from
     the result (the fold path gave them a NULL sig — no such docs exist in
     any driver corpus, asserted in tests).
     """

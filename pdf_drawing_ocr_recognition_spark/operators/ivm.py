@@ -32,14 +32,16 @@ composes them:
   ``count`` aggregate (IVM's standard liveness requirement; validated
   loudly).
 
-The maintained view is a parquet directory published with the
-backup-rename swap of streaming/dedup.py (crash at any point leaves the
-previous view readable) whose ``_view_meta.json`` — snapshot id + the
-exact spec — travels INSIDE the swapped directory, so the guard commits
-atomically with the numbers it describes.  Re-calling at the same
-snapshot is a free no-op; a view ahead of the requested snapshot raises
-(views never silently rewind); a changelog range lost to snapshot
-expiry raises unless ``rebuild="auto"`` opts into a full recompute.
+The maintained view is itself a snapshot table (sources/snapshots.py):
+each refresh is one ``overwrite`` commit whose summary properties carry
+the view meta — source snapshot id + the exact spec — so the guard
+commits atomically with the numbers it describes, and a crash before
+the commit leaves the previous view readable.  Older view snapshots are
+expired at once, so the view keeps one copy of its rows.  Re-calling at
+the same snapshot is a free no-op; a view ahead of the requested
+snapshot raises (views never silently rewind); a changelog range lost
+to snapshot expiry raises unless ``rebuild="auto"`` opts into a full
+recompute.
 
 The invariant the tests pin: after ANY commit history (appends, MOR
 position deletes, equality-delete upserts, overwrites), the maintained
@@ -49,19 +51,20 @@ state.
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.changelog import read_changelog
-from ..sources.snapshots import current_snapshot_id, read_snapshot
-from ..streaming.dedup import _read_folded, _rollback_swap, _swap_in
+from ..sources.snapshots import (
+    current_snapshot_id,
+    expire_snapshots,
+    overwrite_snapshot,
+    read_manifest,
+    read_snapshot,
+)
 
 _INTEGRAL = {"byte", "short", "integer", "long"}
-_META = "_view_meta.json"
+_META = "ivm_view"  # summary property holding the view meta
 
 
 def _validate_spec(group_cols: list[str], aggs: dict) -> tuple[list, list]:
@@ -116,30 +119,21 @@ def _direct_agg(df: DataFrame, group_cols: list[str], alg, ext) -> DataFrame:
 
 
 def _meta_of(view_dir: str) -> dict | None:
-    _rollback_swap(view_dir)
-    path = os.path.join(view_dir, _META)
-    if not os.path.exists(path):
+    sid = current_snapshot_id(view_dir)
+    if sid is None:
         return None
-    with open(path) as f:
-        return json.load(f)
+    return read_manifest(view_dir, sid)["summary"]["properties"][_META]
 
 
-def _publish(
-    spark: SparkSession, df: DataFrame, view_dir: str, meta: dict
-) -> None:
-    tmp = f"{view_dir}_tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _META), "w") as f:
-        json.dump(meta, f)
-    _swap_in(tmp, view_dir)
+def _publish(df: DataFrame, view_dir: str, meta: dict) -> None:
+    overwrite_snapshot(df, view_dir, properties={_META: meta})
+    expire_snapshots(view_dir, keep_last=1)
 
 
 def read_view(spark: SparkSession, view_dir: str) -> DataFrame:
-    """The maintained view (rolling back an interrupted swap first)."""
-    df = _read_folded(spark, view_dir)
-    if df is None:
-        raise ValueError(f"no maintained view at {view_dir}")
-    return df
+    """The maintained view as of its last committed refresh (ValueError
+    when it was never built)."""
+    return read_snapshot(spark, view_dir)
 
 
 def view_snapshot_id(view_dir: str) -> int | None:
@@ -191,7 +185,7 @@ def maintain_agg(
     _check_integral_sums(table, alg)
     if meta is None:
         out = _direct_agg(table, group_cols, alg, ext)
-        _publish(spark, out, view_dir, {"snapshot_id": upto, "spec": spec})
+        _publish(out, view_dir, {"snapshot_id": upto, "spec": spec})
         return read_view(spark, view_dir)
 
     try:
@@ -200,7 +194,7 @@ def maintain_agg(
         if rebuild != "auto":
             raise
         out = _direct_agg(table, group_cols, alg, ext)
-        _publish(spark, out, view_dir, {"snapshot_id": upto, "spec": spec})
+        _publish(out, view_dir, {"snapshot_id": upto, "spec": spec})
         return read_view(spark, view_dir)
 
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
@@ -280,5 +274,5 @@ def maintain_agg(
 
     out_cols = list(group_cols) + [out for out in aggs]
     merged = merged.select(*out_cols)
-    _publish(spark, merged, view_dir, {"snapshot_id": upto, "spec": spec})
+    _publish(merged, view_dir, {"snapshot_id": upto, "spec": spec})
     return read_view(spark, view_dir)

@@ -161,31 +161,27 @@ def auto_join(
         root_a, root_b, key, broadcast_bytes, max_filter_keys
     )
     strat = decision["strategy"]
-    if strat == "spj":
-        return bucket_local_join(spark, root_a, root_b, key), decision
+    build_a = decision["build_side"] == "a"
     da = read_snapshot(spark, root_a)
     db = read_snapshot(spark, root_b)
-    if strat == "broadcast":
-        if decision["build_side"] == "a":
-            out = F.broadcast(da).join(db, key).select(
-                *da.columns, *[c for c in db.columns if c != key]
-            )
-        else:
-            out = da.join(F.broadcast(db), key)
-        return out, decision
-    if strat == "runtime_filter":
-        if decision["build_side"] == "a":
-            facts = join_pruned(
-                spark, root_b, da, key, max_keys=max_filter_keys
-            )
-            # join_pruned output: fact cols then dim's extras; reorder to
-            # the contract (A's columns first)
-            return facts.select(
-                *da.columns, *[c for c in db.columns if c != key]
-            ), decision
-        return join_pruned(
-            spark, root_a, db, key, max_keys=max_filter_keys
-        ).select(
-            *da.columns, *[c for c in db.columns if c != key]
-        ), decision
-    return da.join(db, key), decision
+    if strat == "spj":
+        out = bucket_local_join(spark, root_a, root_b, key)
+    elif strat == "broadcast":
+        out = (
+            F.broadcast(da).join(db, key) if build_a
+            else da.join(F.broadcast(db), key)
+        )
+    elif strat == "runtime_filter":
+        # join_pruned(facts_root, dim): fact columns, then the dim's extras
+        out = (
+            join_pruned(spark, root_b, da, key, max_keys=max_filter_keys)
+            if build_a
+            else join_pruned(spark, root_a, db, key, max_keys=max_filter_keys)
+        )
+    else:
+        out = da.join(db, key)
+    # every strategy answers in one column order: A's, then B's minus the
+    # key (a USING join alone would put the key first)
+    return out.select(
+        *da.columns, *[c for c in db.columns if c != key]
+    ), decision

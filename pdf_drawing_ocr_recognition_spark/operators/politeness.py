@@ -412,10 +412,9 @@ def rate_bursts_from_counts(
     factor_den: int = 1,
 ) -> DataFrame:
     """Burst evaluation over a PRE-AGGREGATED (actor, hour_num, n_events)
-    table — the entry point the streaming fold
-    (streaming/dedup.py:streaming_hour_counts_fold) feeds: counts are the
-    mergeable statistic, so evaluating the folded table equals evaluating
-    the raw events.  Semantics identical to :func:`rate_bursts`."""
+    table: counts are the mergeable statistic, so evaluating a table of
+    folded hourly counts equals evaluating the raw events.  Semantics
+    identical to :func:`rate_bursts`, which calls it."""
     w_trail = (
         Window.partitionBy("actor")
         .orderBy("hour_num")

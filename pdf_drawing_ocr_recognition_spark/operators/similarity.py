@@ -256,9 +256,9 @@ def bucketize(
     """Attach the hyperplane sign-bit bucket (the writable 'inverted list' key).
 
     Arrow path: the per-plane dots are cumsum-sequential NumPy folds, bitwise
-    identical to the `hyperplane_sign_bits` Column expression (whose unrolled
-    64-term-per-plane codegen paid seconds of cold compile per distinct
-    query); the sign-bit packing is integer arithmetic either way.
+    identical to the left-associative Column ``dot`` fold (a Column sign-bit
+    expression unrolls 64 terms per plane and paid seconds of cold compile
+    per distinct query); the sign-bit packing is integer arithmetic.
 
     The bucket is a 64-bit LONG: the sizing rule (``planes_for_corpus``)
     steers 10^9+ corpora toward 20–30+ planes, and ``1 << i`` on int32

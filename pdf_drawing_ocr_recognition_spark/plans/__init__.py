@@ -1,6 +1,6 @@
 """Pipeline composition + SparkSession configuration."""
 
 from .session import build_session
-from .pipeline import extraction_pipeline, OUTPUT_SCHEMA
+from .pipeline import extraction_pipeline
 
-__all__ = ["build_session", "extraction_pipeline", "OUTPUT_SCHEMA"]
+__all__ = ["build_session", "extraction_pipeline"]

@@ -12,11 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import EXTRACT_SCHEMA, extract_pages
+from ..operators.extract import extract_pages
 from ..operators.skew import salted_repartition
 from ..sources.pages import read_pages
-
-OUTPUT_SCHEMA = EXTRACT_SCHEMA
 
 TARGET_LANGS = ("en", "zh", "de")
 

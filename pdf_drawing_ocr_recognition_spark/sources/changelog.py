@@ -62,7 +62,6 @@ from .snapshots import (
     read_manifest,
 )
 
-_CHANGE_COLS = ("_change_type", "_commit_snapshot_id")
 # row-preserving by construction: compaction/mask-rewrite ("replace"),
 # stats commits, metadata-only schema changes — zero row changes, exactly
 _ROW_PRESERVING = ("replace", "compute-stats", "alter-schema")

@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import json
 
-FULL_PAGE = [0.0, 100.0, 0.0, 100.0]
-
 
 class InvalidPatternError(ValueError):
     """Analog of PdorInvalidPatternError (ref pdor/pdor_exception.py:146-157)."""
@@ -74,12 +72,3 @@ def save_patterns(patterns: dict[str, dict], path: str) -> str:
     with open(path, "w", encoding="utf-8") as f:
         json.dump(patterns, f, ensure_ascii=False, indent=2)
     return path
-
-
-def patterns_to_rows(patterns: dict[str, dict]) -> list[tuple]:
-    """Registry → rows for a broadcast dim DataFrame
-    (name STRING, prompt STRING, dpi INT, sub_imgs ARRAY<ARRAY<DOUBLE>>)."""
-    return [
-        (p["name"], p["prompt"], p["dpi"], [list(map(float, b)) for b in p["sub_imgs"]])
-        for p in patterns.values()
-    ]

@@ -834,13 +834,14 @@ def append_snapshot(
 
 def overwrite_snapshot(
     df: DataFrame, root: str, partition_spec: list[dict] | None = None,
-    distribution: str = "none",
+    distribution: str = "none", properties: dict | None = None,
 ) -> int:
     """Commit *df* as a new snapshot replacing ALL previous files (the
     Iceberg ``overwrite`` operation); old snapshots stay time-travelable
     until expired.  *partition_spec* sets/evolves the hidden-partitioning
     spec; ``None`` inherits the parent's.  *distribution* is the write
-    distribution mode (see :func:`_write_data_files`)."""
+    distribution mode (see :func:`_write_data_files`).  *properties*
+    lands in the manifest's summary, as in :func:`append_snapshot`."""
     init_table(root)
     parent = current_snapshot_id(root)
     if parent:
@@ -878,7 +879,8 @@ def overwrite_snapshot(
     return _commit(
         root, parent, added, added, n_rows,
         json.dumps(_struct_of(fields).jsonValue()), "overwrite",
-        stats=stats, partition_spec=partition_spec, partitions=parts,
+        stats=stats, properties=properties,
+        partition_spec=partition_spec, partitions=parts,
         schemas=schemas, current_schema_id=cur_sid,
         file_schemas={f: cur_sid for f in added}, last_field_id=last_fid,
         row_counts=rcounts, file_sizes=fsizes,
@@ -898,7 +900,8 @@ def commit_staged_files(
     task in parallel; this harvests their footers (stats / row counts /
     byte sizes — the same metadata :func:`_write_data_files` records) and
     commits the manifest, MOVING the files into the table.  Empty staged
-    files are dropped (as Iceberg; a task that saw no rows never lands).
+    files are deleted, never registered (as Iceberg; a task that saw no
+    rows never lands).
 
     *operation* is ``"append"`` (parent files carried, schema merged by
     name exactly as :func:`append_snapshot`) or ``"overwrite"`` (files
@@ -967,6 +970,7 @@ def commit_staged_files(
         name = f"{commit_uuid}-{i:05d}.parquet"
         md = pq.ParquetFile(src).metadata
         if md.num_rows == 0:
+            os.remove(src)  # never registered: nothing else reclaims it
             continue
         n_rows += md.num_rows
         stats[name] = _file_column_stats(md)

@@ -321,11 +321,6 @@ class SnapshotBatchReader(DataSourceReader):
         yield from tab.to_batches()
 
 
-@dataclass
-class _StreamOffset:
-    snapshot_id: int
-
-
 class SnapshotStreamReader(DataSourceStreamReader):
     """Tail-the-table streaming source: offsets are snapshot ids; each
     micro-batch reads exactly the files the commits in (start, end]

@@ -13,9 +13,8 @@ is that contract for ``sources/snapshots.py``:
   snapshot summary map);
 * replay detection reads the table's OWN manifest log (scoped per
   stream_id so independent streams can share a table) — the guard commits
-  atomically with the data it guards, the same discipline as the
-  ``_last_batch.json`` fix in streaming/dedup.py but stronger: the id
-  lives inside the committed manifest itself, no sidecar;
+  atomically with the data it guards: the id lives inside the committed
+  manifest itself, no sidecar;
 * a :class:`CommitConflictError` from a concurrent writer is re-raised so
   the streaming query retries the batch (it is NOT marked committed).
 

@@ -7,6 +7,11 @@ schema-stable source, the SAME operator runs unchanged under Structured
 Streaming — continuous ingestion of newly landed WARC partitions with exactly
 -once sinks via checkpointing.  ``Trigger.AvailableNow`` turns it back into an
 incremental batch (the test uses that to prove stream==batch output).
+
+Streaming output lands through one commit protocol, the snapshot table:
+``stream_extraction(...).writeStream.foreachBatch(snapshot_sink(root))``
+commits each micro-batch as one snapshot and skips a replayed batch id
+(streaming/snapshot_sink.py).
 """
 
 from __future__ import annotations
@@ -61,25 +66,6 @@ def windowed_event_counts(
     )
 
 
-def run_stream_to_parquet(
-    spark: SparkSession,
-    pages_path: str,
-    patterns: dict[str, dict],
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain all currently-available input exactly once (AvailableNow), then stop."""
-    result = stream_extraction(spark, pages_path, patterns)
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_windowed_stream_to_memory(
     spark: SparkSession,
     events_path: str,
@@ -107,69 +93,6 @@ def run_windowed_stream_to_memory(
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_stream_with_manifest(
-    spark: SparkSession,
-    pages_path: str,
-    patterns: dict[str, dict],
-    out_dir: str,
-    checkpoint_dir: str,
-    langs: tuple[str, ...] = ("en", "zh", "de"),
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Streaming extraction landed through the SAME atomic-commit discipline
-    as the batch manifest path: ``foreachBatch`` writes micro-batch K under
-    ``batch=K/`` via tmp-dir + atomic rename + fsynced manifest row keyed by
-    the batch id, with row/failure stats collected by ``Observation`` during
-    the write (one scan).
-
-    Exactly-once landing: Spark replays a failed/restarted micro-batch with
-    the SAME batch id from the checkpoint; the rename makes the redo
-    invisible to readers and the manifest row is rewritten, so duplicates
-    cannot land — the streaming twin of ``run_with_manifest``'s resume
-    contract (and of Iceberg's snapshot-commit isolation, ICEBERG.md).
-    """
-    import os
-    import time
-
-    from pyspark.sql import Observation
-
-    from ..operators.manifest import _commit_bucket
-
-    result = stream_extraction(
-        spark, pages_path, patterns, langs=langs,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-    def land(df, batch_id: int) -> None:
-        t0 = time.time()
-        obs = Observation(f"stream_batch_{batch_id}")
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("status") == "failed").cast("long")).alias("nf"),
-        )
-        tmp_dir = os.path.join(out_dir, f".batch={batch_id}.tmp")
-        final_dir = os.path.join(out_dir, f"batch={batch_id}")
-        observed.write.mode("overwrite").parquet(tmp_dir)
-        stats = obs.get
-        if os.path.isdir(final_dir):
-            import shutil
-
-            shutil.rmtree(final_dir)
-        os.replace(tmp_dir, final_dir)
-        _commit_bucket(
-            out_dir, int(batch_id), stats["n"], stats["nf"] or 0, time.time() - t0
-        )
-
-    q = (
-        result.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )

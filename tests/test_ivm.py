@@ -5,9 +5,6 @@ byte-equal to a direct groupBy over the table's final state — while only
 ever reading the changelog delta (count/sum) plus the dirty groups'
 rows (min/max)."""
 
-import os
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,12 +160,25 @@ def test_expired_changelog_raises_unless_rebuild_auto(spark, paths):
     assert sorted(tuple(r) for r in v.collect()) == _direct(spark, root)
 
 
-def test_view_survives_interrupted_swap(spark, paths):
+def test_view_survives_interrupted_swap(spark, paths, monkeypatch):
     root, view = paths
     S.append_snapshot(_docs(spark, 100), root)
     maintain_agg(spark, root, view, ["lang"], AGGS)
     before = sorted(tuple(r) for r in read_view(spark, view).collect())
-    # simulate a crash between the two publish renames: live moved aside
-    os.rename(view, view + "_bak")
+    S.append_snapshot(_docs(spark, 100), root)
+
+    # simulate a crash inside the next refresh: its data files are
+    # written, but the view's manifest commit never happens
+    def crash(*_a, **_k):
+        raise RuntimeError("killed before commit")
+
+    monkeypatch.setattr(S, "_commit", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        maintain_agg(spark, root, view, ["lang"], AGGS)
+    monkeypatch.undo()
     assert sorted(tuple(r) for r in read_view(spark, view).collect()) == before
     assert view_snapshot_id(view) == 1
+    # the next refresh proceeds from the last committed view
+    assert _view(spark, root, view) == _direct(spark, root)
+    assert view_snapshot_id(view) == 2
+    assert len(S.snapshot_log(view)) == 1  # older refreshes expired

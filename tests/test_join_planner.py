@@ -105,3 +105,65 @@ def test_mismatched_buckets_do_not_spj(spark, tmp_path):
     )
     d = choose_join_strategy(ra, rb, "doc_id")
     assert d["strategy"] != "spj"
+
+
+def _facts_key_mid(spark, n=2000):
+    return _facts(spark, n).select("lang", "doc_id", "n_chars")
+
+
+def _dim_key_last(spark, ids):
+    return _dim(spark, ids).select("label", "doc_id")
+
+
+
+@pytest.mark.parametrize(
+    "strategy,build_side,small_side,kw",
+    [
+        ("spj", None, "b", {}),
+        ("broadcast", "b", "b", {}),
+        ("broadcast", "a", "a", {}),
+        ("runtime_filter", "b", "b", {"broadcast_bytes": 1}),
+        ("runtime_filter", "a", "a", {"broadcast_bytes": 1}),
+        ("shuffle", None, "b", {"broadcast_bytes": 1, "max_filter_keys": 10}),
+    ],
+)
+def test_column_order_when_key_is_not_first(
+    spark, tmp_path, strategy, build_side, small_side, kw
+):
+    """Every strategy returns A's columns, then B's minus the key, even
+    when the key is not A's first column."""
+    spec = (
+        [{"source": "doc_id", "transform": "bucket[8]"}]
+        if strategy == "spj" else None
+    )
+    dim_ids = {
+        "spj": range(0, 2000, 3),
+        "broadcast": [1, 5, 9],
+        "runtime_filter": range(100),
+        "shuffle": range(200),
+    }[strategy]
+    roots = {}
+    for side in "ab":
+        roots[side] = root = str(tmp_path / side)
+        if side == small_side:
+            S.append_snapshot(
+                _dim_key_last(spark, dim_ids), root, partition_spec=spec
+            )
+        else:
+            S.append_snapshot(
+                _facts_key_mid(spark).repartition(8), root,
+                partition_spec=spec,
+            )
+            if strategy == "runtime_filter":
+                compute_file_blooms(spark, root, "doc_id")
+    out, decision = auto_join(spark, roots["a"], roots["b"], "doc_id", **kw)
+    assert decision["strategy"] == strategy, decision["reason"]
+    assert decision["build_side"] == build_side
+    da = S.read_snapshot(spark, roots["a"])
+    db = S.read_snapshot(spark, roots["b"])
+    cols = da.columns + [c for c in db.columns if c != "doc_id"]
+    assert out.columns == cols
+    want = da.join(db, "doc_id").select(*cols)
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, want.collect())
+    )

@@ -1,53 +1,14 @@
-"""Operator-level Spark tests: relational pipeline equality, manifest resume,
-salted aggregation, metrics, multimodal plumbing."""
+"""Operator-level Spark tests: manifest resume, salted aggregation, metrics,
+multimodal plumbing."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import PATTERNS, gen_rows
-from pdf_drawing_ocr_recognition_spark.kernel import extract_document
+from pdf_drawing_ocr_recognition_spark.fixtures.gen_pages import PATTERNS
 
 N_ROWS = 400
-
-
-class TestRelationalPipeline:
-    """The exploded/shuffled variant must reproduce the single-pass kernel
-    byte-for-byte on grid documents (ordering recovered by explicit keys)."""
-
-    def test_matches_kernel_on_grid_docs(self, spark, pages_small):
-        from pdf_drawing_ocr_recognition_spark.operators.relational import (
-            relational_extract,
-        )
-
-        pages = spark.read.parquet(pages_small)
-        got = {
-            r["url"]: r["extracted_text"]
-            for r in relational_extract(spark, pages, PATTERNS).collect()
-        }
-        assert got, "no grid docs decoded"
-        checked = 0
-        for url, _ts, html, _text, lang in gen_rows(600):
-            oracle = extract_document(url, html, lang, PATTERNS)
-            if url in got and oracle["status"] == "ok" and oracle["spans"] and (
-                oracle["spans"][0]["group"].startswith("page_")
-            ):
-                assert got[url] == oracle["extracted_text"], url
-                checked += 1
-        assert checked > 30, f"only {checked} grid docs cross-checked"
-
-    def test_shuffle_partitions_do_not_change_output(self, spark, pages_small):
-        from pdf_drawing_ocr_recognition_spark.operators.relational import (
-            relational_extract,
-        )
-
-        pages = spark.read.parquet(pages_small)
-        a = relational_extract(spark, pages.repartition(1), PATTERNS)
-        b = relational_extract(spark, pages.repartition(13), PATTERNS)
-        da = {r["url"]: r["extracted_text"] for r in a.collect()}
-        db = {r["url"]: r["extracted_text"] for r in b.collect()}
-        assert da == db
 
 
 class TestManifestResume:
@@ -558,29 +519,6 @@ class TestCorpusPrep:
         kept = {r["doc_id"]: r["split"] for r in mixed.select("doc_id", "split").collect()}
         orig = {r["doc_id"]: r["split"] for r in prepared.select("doc_id", "split").collect()}
         assert all(orig[k] == v for k, v in kept.items())
-
-
-class TestCompaction:
-    def test_compacts_small_files_and_preserves_rows(self, spark, tmp_path):
-        from pdf_drawing_ocr_recognition_spark.operators.compaction import (
-            compact_parquet_dir,
-            plan_compaction,
-        )
-
-        path = str(tmp_path / "landed")
-        spark.range(10000).selectExpr(
-            "id", "repeat('x', 50) AS pad"
-        ).repartition(24).write.parquet(path)
-        before = [f for f in os.listdir(path) if f.startswith("part-")]
-        assert len(before) == 24
-        want = spark.read.parquet(path).count()
-
-        n = compact_parquet_dir(spark, path, target_mb=256)
-        after = [f for f in os.listdir(path) if f.startswith("part-")]
-        assert len(after) == n == plan_compaction(path, 256) == 1
-        assert spark.read.parquet(path).count() == want
-        # already-compact dir is a no-op
-        assert compact_parquet_dir(spark, path, target_mb=256) == 1
 
 
 class TestSequencePacking:

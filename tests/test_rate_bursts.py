@@ -55,66 +55,3 @@ def test_boundary_is_strict(spark):
     # n=5 -> 15 > 12 -> burst
     got2 = _run(spark, _hours("b", [2, 2, 2, 5]))
     assert got2[("b", 3)] == (5, 6, 1)
-
-
-def test_streaming_fold_equals_batch(spark, tmp_path):
-    """T172: three micro-batches (one splitting an hour across batches,
-    one adding late events to an already-folded hour) fold into counts
-    identical to the batch aggregate, and burst evaluation over the folded
-    table equals rate_bursts over the raw events."""
-    from pdf_drawing_ocr_recognition_spark.operators.politeness import (
-        rate_bursts_from_counts,
-    )
-    from pdf_drawing_ocr_recognition_spark.streaming.dedup import (
-        streaming_hour_counts_fold,
-    )
-
-    batches = [
-        _hours("a", [2, 2]) + _hours("b", [1]),
-        _hours("a", [0, 0, 2, 9]),      # hour 2 tops up; hour 3 spikes
-        _hours("a", [0, 2], start=0),   # LATE events raise folded hour 1
-    ]
-    stream_dir = str(tmp_path / "events")
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, "actor string, ts_us long").coalesce(
-            1
-        ).write.parquet(f"{stream_dir}/f{i}")
-
-    ev = (
-        spark.readStream.schema("actor string, ts_us long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{stream_dir}/f*")
-    )
-    counts_path = str(tmp_path / "counts")
-    q = streaming_hour_counts_fold(ev, counts_path, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    allrows = [r for b in batches for r in b]
-    whole = rate_bursts(
-        spark.createDataFrame(allrows, "actor string, ts_us long")
-    )
-    folded = rate_bursts_from_counts(spark.read.parquet(counts_path))
-    assert sorted(map(tuple, folded.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-    # the late top-up is visible: hour 1 totals 4 (2 + late 2)
-    stored = {
-        (r["actor"], r["hour_num"]): r["n_events"]
-        for r in spark.read.parquet(counts_path).collect()
-    }
-    assert stored[("a", 1)] == 4
-
-    # round-5 idempotence guard: a replayed micro-batch must NOT re-sum.
-    # Wiping the checkpoint replays every batch_id from 0 against the
-    # already-folded table (the crash-between-swap-and-commit shape);
-    # the persisted _last_batch marker skips them all — counts unchanged.
-    import shutil
-
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    q2 = streaming_hour_counts_fold(ev, counts_path, str(tmp_path / "ckpt"))
-    q2.awaitTermination()
-    replayed = {
-        (r["actor"], r["hour_num"]): r["n_events"]
-        for r in spark.read.parquet(counts_path).collect()
-    }
-    assert replayed == stored

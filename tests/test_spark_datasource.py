@@ -201,6 +201,28 @@ def test_no_stage_debris_and_orphan_lifecycle(spark, root):
     assert not os.path.exists(stray)
 
 
+def test_zero_row_stage_file_removed_at_commit(spark, root):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    S.init_table(root)
+    data = S._data_dir(root)
+    staged = []
+    for name, vals in (("full", [1, 2]), ("empty", [])):
+        p = os.path.join(data, f".dstmp-{name}.parquet")
+        pq.write_table(pa.table({"doc_id": pa.array(vals, pa.int64())}), p)
+        staged.append(p)
+    schema = StructType([StructField("doc_id", LongType())])
+    S.commit_staged_files(root, staged, schema)
+    assert [f for f in os.listdir(data) if f.startswith(".")] == []
+    assert len(S.read_manifest(root, 1)["files"]) == 1
+    assert sorted(
+        r["doc_id"] for r in S.read_snapshot(spark, root).collect()
+    ) == [1, 2]
+
+
 def test_streaming_source_to_sink_with_evolution(spark, tmp_path):
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
