@@ -2,11 +2,15 @@
 
     spark-submit --py-files dist/pdor_spark.zip jobs/run_extraction.py \
         --pages <pages parquet dir> --patterns <patterns.json> \
-        --out <output dir> [--buckets 64] [--langs en,zh,de]
+        --out <output dir> [--buckets 64] [--langs en,zh,de] [--concurrency N]
 
-Runs the manifest-resumable extraction job: killed runs resume idempotently
-(re-invoke with the same --out).  Per-partition metrics are written to
-<out>/_metrics alongside the results and the _manifest lineage.
+Runs the manifest-resumable extraction job: the pending input (url, html,
+lang) is staged once under <out>/_pending by bucket, then bucket jobs run from
+a driver pool of --concurrency threads (default: the cluster's default
+parallelism), each committing bucket=K/ and its _manifest entry atomically.
+Killed runs resume idempotently (re-invoke with the same --out).
+Per-partition metrics are written to <out>/_metrics alongside the results and
+the _manifest lineage.
 """
 
 from __future__ import annotations
@@ -27,8 +31,9 @@ def main(argv=None) -> int:
     parser.add_argument(
         "--concurrency",
         type=int,
-        default=1,
-        help="bucket jobs submitted concurrently from a bounded driver pool",
+        default=None,
+        help="bucket jobs run at once from the driver pool "
+        "(default: spark.sparkContext.defaultParallelism; 1 runs them in turn)",
     )
     parser.add_argument(
         "--iceberg",
@@ -59,7 +64,7 @@ def main(argv=None) -> int:
         pages = read_pages(spark, args.pages, langs=langs)
     result = run_with_manifest(
         spark,
-        pages,
+        pages.select("url", "html", "lang"),
         lambda df: extract_pages(df, patterns, max_try=args.max_try),
         args.out,
         n_buckets=args.buckets,

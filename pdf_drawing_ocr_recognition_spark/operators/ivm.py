@@ -227,11 +227,12 @@ def maintain_agg(
     ]
     count_out = next(out for out, k, _c in alg if k == "count")
     for out, _kind, _col in alg:
+        # a sum over only NULLs is NULL in the direct groupBy, so a group
+        # stays NULL until a non-NULL value reaches it
+        stored, d = F.col(out), F.col("__d_" + out)
         sel.append(
-            (
-                F.coalesce(F.col(out), F.lit(0))
-                + F.coalesce(F.col("__d_" + out), F.lit(0))
-            )
+            F.when(stored.isNull() & d.isNull(), F.lit(None))
+            .otherwise(F.coalesce(stored, F.lit(0)) + F.coalesce(d, F.lit(0)))
             .cast("long")
             .alias(out)
         )

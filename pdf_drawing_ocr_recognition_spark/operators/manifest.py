@@ -5,23 +5,33 @@ is_parsed :323-328) into job-level machinery for 10^12-document runs:
 
 - work is partitioned into **buckets** by ``pmod(xxhash64(url), n_buckets)``
   (content-addressed, independent of file layout, stable across runs);
-- each completed bucket commits a manifest row (bucket id, row count, status,
-  metrics) AND its result parquet, written atomically (temp dir + rename);
 - resume = read committed manifests, **left-anti join** the input's buckets
-  against them, and process only the remainder — a re-run after a kill
-  re-does at most the in-flight bucket, and re-doing it is harmless because
-  the kernel is deterministic and the commit is atomic.
+  against them, and keep only the remainder;
+- the remainder is **staged once** under ``<out>/_pending/bucket=K/`` (one
+  scan of the input, shuffled on ``bucket``).  A filter on the computed
+  bucket column cannot reach the parquet scan, so filtering the input per
+  bucket would re-read all of it for every bucket; each bucket job instead
+  reads only its own staged slice;
+- bucket jobs run from a bounded driver thread pool, as wide as the cores by
+  default; each completed bucket commits its result parquet (temp dir +
+  rename to ``bucket=K/``) and then its manifest entry
+  ``_manifest/bucket-K.json`` (temp file + rename), then drops its staged
+  slice.  A re-run after a kill re-does at most the buckets in flight, and
+  re-doing one is harmless because the kernel is deterministic and the
+  commit is atomic.
 
-The manifest is itself a small parquet table next to the results, so lineage
-(which bucket produced which rows, at what throughput) is queryable with the
-same engine.
+The manifest entries are small JSON files next to the results
+(:func:`read_manifest` turns them into a DataFrame), so lineage (which bucket
+produced which rows, at what throughput) is queryable with the same engine.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,18 +96,48 @@ def _commit_bucket(output_dir: str, bucket: int, n_rows: int, n_failed: int, wal
     os.replace(tmp, final)
 
 
-def _process_bucket(todo: DataFrame, bucket: int, extract_fn, output_dir: str) -> None:
-    """One restartable unit of work: filter → extract → write → commit.
+def _stage_pending(
+    pages: DataFrame, manifest: DataFrame, n_buckets: int, staged: str
+) -> list[int]:
+    """Write the resume delta once as ``<staged>/bucket=K/`` slices; returns
+    the staged bucket ids, read from the directory names.
+
+    The rebalance hint shuffles on ``bucket`` before the write, so each
+    slice lands as a few files that its bucket job reads on its own.
+    """
+    (
+        pending_inputs(pages, manifest, n_buckets)
+        .hint("rebalance", "bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(staged)
+    )
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(staged) if d.startswith("bucket=")
+    )
+
+
+def _process_bucket(
+    spark: SparkSession,
+    staged: str,
+    schema,
+    bucket: int,
+    extract_fn,
+    output_dir: str,
+) -> None:
+    """One restartable unit of work: read slice → extract → write → commit.
 
     Row/failure stats are collected DURING the write via ``Observation``
     (accumulator-backed query metrics), so the bucket's data is scanned
-    exactly once — no post-write re-read of the parquet.
+    exactly once — no post-write re-read of the parquet.  The slice is read
+    with the input's *schema*, which spares a schema-inference job per
+    bucket, and is deleted once the bucket's manifest has committed.
     """
     from pyspark.sql import Observation
 
     t0 = time.time()
-    part = todo.filter(F.col("bucket") == bucket).drop("bucket")
-    result = extract_fn(part)
+    slice_dir = os.path.join(staged, f"bucket={bucket}")
+    result = extract_fn(spark.read.schema(schema).parquet(slice_dir))
     obs = Observation(f"bucket_{bucket}")
     observed = result.observe(
         obs,
@@ -109,13 +149,12 @@ def _process_bucket(todo: DataFrame, bucket: int, extract_fn, output_dir: str) -
     observed.write.mode("overwrite").parquet(tmp_dir)
     stats = obs.get
     if os.path.isdir(final_dir):
-        import shutil
-
         shutil.rmtree(final_dir)
     os.replace(tmp_dir, final_dir)
     _commit_bucket(
         output_dir, bucket, stats["n"], stats["nf"] or 0, time.time() - t0
     )
+    shutil.rmtree(slice_dir)
 
 
 def run_with_manifest(
@@ -124,39 +163,37 @@ def run_with_manifest(
     extract_fn,
     output_dir: str,
     n_buckets: int = 8,
-    max_concurrency: int = 1,
+    max_concurrency: int | None = None,
 ) -> DataFrame:
     """Run extraction bucket-by-bucket with manifest commits; returns results.
 
-    Each bucket is one restartable unit of work: filter → extract → write
-    parquet under ``bucket=K/`` → commit manifest row.  A killed run leaves
-    committed buckets untouched; the next invocation processes only the
-    left-anti remainder.  Bucket results land via directory rename so readers
-    never observe half-written buckets.
-
-    ``max_concurrency > 1`` submits bucket jobs from a bounded driver thread
-    pool — Spark's scheduler interleaves their stages across the executors,
-    so stragglers in one bucket no longer serialize the whole run (the fix
-    for the driver-side sequential-loop scalability note).  Each bucket's
-    write + manifest commit stays independent and atomic, so kill/resume
-    semantics are unchanged at any concurrency.
+    Stages the pending input once under ``<output_dir>/_pending``, then runs
+    one restartable job per staged bucket (see the module docstring) from a
+    driver pool of ``max_concurrency`` threads (default:
+    ``defaultParallelism``; 1 runs the buckets in turn).  Bucket results land
+    via directory rename, so readers never observe half-written buckets; a
+    killed run loses at most the buckets in flight, and re-invoking it
+    processes only the remainder.
     """
     manifest = read_manifest(spark, output_dir)
-    todo = pending_inputs(pages, manifest, n_buckets)
-    buckets = sorted(r["bucket"] for r in todo.select("bucket").distinct().collect())
-    if max_concurrency <= 1:
-        for bucket in buckets:
-            _process_bucket(todo, bucket, extract_fn, output_dir)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            futures = [
-                pool.submit(_process_bucket, todo, b, extract_fn, output_dir)
-                for b in buckets
-            ]
-            for f in futures:
-                f.result()  # surface the first failure, after all complete
+    staged = os.path.join(output_dir, "_pending")
+    done = {r["bucket"] for r in manifest.collect()}
+    buckets = (
+        []
+        if done >= set(range(n_buckets))
+        else _stage_pending(pages, manifest, n_buckets, staged)
+    )
+    width = max_concurrency or spark.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [
+            pool.submit(
+                _process_bucket, spark, staged, pages.schema, b, extract_fn, output_dir
+            )
+            for b in buckets
+        ]
+        for f in futures:
+            f.result()  # surface the first failure, after all complete
+    shutil.rmtree(staged, ignore_errors=True)
     return spark.read.option("basePath", output_dir).parquet(
         os.path.join(output_dir, "bucket=*")
     )

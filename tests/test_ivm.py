@@ -112,6 +112,33 @@ def test_null_group_keys_are_groups(spark, paths):
     assert v == {"a": (2, 10), None: (1, 20)}
 
 
+def test_all_null_sum_group_stays_null(spark, paths):
+    root, view = paths
+    schema = "doc_id long, src string, n_chars long"
+    S.append_snapshot(
+        spark.createDataFrame([(1, "a", None), (2, "a", None), (3, "b", 7)], schema),
+        root,
+    )
+    aggs = {"n": ("count",), "sx": ("sum", "n_chars")}
+    maintain_agg(spark, root, view, ["src"], aggs)
+    # fold a delta that touches "b" only, then one that adds another NULL
+    # to "a": the all-NULL group's sum stays NULL through both folds
+    S.append_snapshot(spark.createDataFrame([(4, "b", 1)], schema), root)
+    maintain_agg(spark, root, view, ["src"], aggs)
+    S.append_snapshot(spark.createDataFrame([(5, "a", None)], schema), root)
+    got = {
+        r["src"]: (r["n"], r["sx"])
+        for r in maintain_agg(spark, root, view, ["src"], aggs).collect()
+    }
+    direct = {
+        r["src"]: (r["n"], r["sx"])
+        for r in S.read_snapshot(spark, root)
+        .groupBy("src")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").cast("long").alias("sx"))
+        .collect()
+    }
+    assert got == direct == {"a": (3, None), "b": (2, 8)}
+
 def test_validation_raises(spark, paths):
     root, view = paths
     S.append_snapshot(_docs(spark, 50), root)

@@ -79,8 +79,8 @@ class TestManifestResume:
         assert got == want
 
     def test_concurrent_buckets_match_sequential(self, spark, tmp_path):
-        """max_concurrency=4: same results, same manifest, same resume — the
-        pool only changes WHEN jobs run, never what they write."""
+        """max_concurrency=4 vs 1: same results, same manifest, same resume —
+        the pool only changes WHEN jobs run, never what they write."""
         from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
         from pdf_drawing_ocr_recognition_spark.operators.manifest import (
             read_manifest,
@@ -91,7 +91,9 @@ class TestManifestResume:
         fn = lambda df: extract_pages(df, PATTERNS)
         seq_dir = str(tmp_path / "seq")
         con_dir = str(tmp_path / "con")
-        seq = run_with_manifest(spark, pages, fn, seq_dir, n_buckets=4)
+        seq = run_with_manifest(
+            spark, pages, fn, seq_dir, n_buckets=4, max_concurrency=1
+        )
         con = run_with_manifest(
             spark, pages, fn, con_dir, n_buckets=4, max_concurrency=4
         )
@@ -116,6 +118,109 @@ class TestManifestResume:
             spark, pages, counting_fn, con_dir, n_buckets=4, max_concurrency=4
         ).count()
         assert len(calls) == 0
+
+    @staticmethod
+    def _debris(out_dir):
+        return sorted(
+            d for d in os.listdir(out_dir) if d == "_pending" or d.endswith(".tmp")
+        )
+
+    def test_input_is_scanned_once(self, spark, tmp_path):
+        """The pending input is staged once, not filtered once per bucket; a
+        fully committed output stages (and reads) nothing."""
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+        from pdf_drawing_ocr_recognition_spark.operators.manifest import (
+            run_with_manifest,
+        )
+
+        pages = self._pages(spark, tmp_path)
+        n = pages.count()
+        rows = spark.sparkContext.accumulator(0)
+
+        def count_rows(batches):
+            for pdf in batches:
+                rows.add(len(pdf))
+                yield pdf
+
+        counted = pages.mapInPandas(count_rows, pages.schema)
+        out_dir = str(tmp_path / "out")
+        fn = lambda df: extract_pages(df, PATTERNS)
+        assert run_with_manifest(spark, counted, fn, out_dir, n_buckets=8).count() == n
+        assert rows.value == n
+        assert self._debris(out_dir) == []
+
+        rows.value = 0
+        run_with_manifest(spark, counted, fn, out_dir, n_buckets=8)
+        assert rows.value == 0
+        assert self._debris(out_dir) == []
+
+    def _resume_after_fault(self, spark, tmp_path, monkeypatch, inject):
+        """Run once with *inject* applied to the manifest module (the run must
+        raise), then resume; the resumed output equals an uninterrupted run's
+        on every column, and only uncommitted buckets are extracted again."""
+        from pdf_drawing_ocr_recognition_spark.operators import manifest as M
+        from pdf_drawing_ocr_recognition_spark.operators.extract import extract_pages
+
+        pages = self._pages(spark, tmp_path)
+        fn = lambda df: extract_pages(df, PATTERNS)
+
+        def rows_by_url(df):
+            return {r["url"]: r.asDict(recursive=True) for r in df.collect()}
+
+        want = rows_by_url(
+            M.run_with_manifest(spark, pages, fn, str(tmp_path / "clean"), n_buckets=8)
+        )
+        out_dir = str(tmp_path / "out")
+        with monkeypatch.context() as m:
+            inject(m, M)
+            with pytest.raises(RuntimeError, match="injected"):
+                M.run_with_manifest(spark, pages, fn, out_dir, n_buckets=8)
+        missing = set(range(8)) - {
+            r["bucket"] for r in M.read_manifest(spark, out_dir).collect()
+        }
+        assert missing
+
+        extracted = []
+
+        def counting_fn(df):
+            seen = df.select(M.bucket_of(df.url, 8).alias("b")).distinct()
+            extracted.extend(r["b"] for r in seen.collect())
+            return fn(df)
+
+        got = rows_by_url(
+            M.run_with_manifest(spark, pages, counting_fn, out_dir, n_buckets=8)
+        )
+        assert sorted(extracted) == sorted(missing)
+        assert got == want
+        assert self._debris(out_dir) == []
+
+    def test_resume_after_fault_between_rename_and_manifest_commit(
+        self, spark, tmp_path, monkeypatch
+    ):
+        def inject(m, M):
+            real = M._commit_bucket
+
+            def commit(output_dir, bucket, *args):
+                if bucket == 3:
+                    assert os.path.isdir(os.path.join(output_dir, "bucket=3"))
+                    raise RuntimeError("injected commit failure")
+                return real(output_dir, bucket, *args)
+
+            m.setattr(M, "_commit_bucket", commit)
+
+        self._resume_after_fault(spark, tmp_path, monkeypatch, inject)
+
+    def test_resume_after_fault_right_after_staging(self, spark, tmp_path, monkeypatch):
+        def inject(m, M):
+            real = M._stage_pending
+
+            def stage(*args):
+                real(*args)
+                raise RuntimeError("injected failure after staging")
+
+            m.setattr(M, "_stage_pending", stage)
+
+        self._resume_after_fault(spark, tmp_path, monkeypatch, inject)
 
 
 class TestSkew:

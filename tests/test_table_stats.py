@@ -69,6 +69,21 @@ def test_staleness_and_time_scoping(spark, root):
         table_stats(root, snapshot_id=1)
 
 
+def test_staleness_counts_delete_and_overwrite_commits(spark, root):
+    S.append_snapshot(_docs(spark), root)
+    analyze_table(spark, root, exact=True)  # snapshot 2
+    st = table_stats(root)
+    assert (st["rows_added_since"], st["commits_since"]) == (0, 0)
+    S.delete_from(spark, root, [("doc_id", "<", 100)])  # snapshot 3
+    st = table_stats(root)
+    assert (st["rows_added_since"], st["commits_since"]) == (0, 1)
+    S.overwrite_snapshot(S.read_snapshot(spark, root).filter("doc_id < 200"), root)
+    st = table_stats(root)
+    assert st["commits_since"] == 2
+    # re-analyzing makes the stats current again
+    analyze_table(spark, root, exact=True)
+    assert table_stats(root)["commits_since"] == 0
+
 def test_approx_mode_and_validation(spark, root):
     df = _docs(spark, 1000).withColumn(
         "payload", F.encode(F.col("lang"), "utf-8")
